@@ -14,21 +14,38 @@ Status lifecycle is the reference's: Queued → Running → Complete | Error
 (query_handler_state.rs:28-44). Results are materialized as Parquet under
 ``<results_root>/<query_id>/`` (reference writes
 ``/query_results/<uuid>/rec_<n>.parquet``, materialize_files_task.rs:117-141)
-with a global ``__row_id`` column so fetch supports forward AND reverse
-cursor paging (the reference walks ``(file, row_group, row)`` cursors;
-a row-id predicate gives identical semantics and lets Parquet row-group
-stats prune the scan server-side).
+with a global ``__row_id`` column. ``results_root`` is a directory the
+driver can read locally, like the reference's ``/query_results``.
+
+Pages are served by the driver, not by Spark. Once the result is written,
+the engine reads the Parquet footers and keeps, per non-empty row group,
+its ``__row_id`` min/max, file and row-group number — the reference's
+``(file_idx, row_group_idx, row_idx)`` cursor
+(query_data_handler.rs:239-253) flattened to one row id. ``fetch``
+bisects that index and reads only the row groups that hold the page
+with pyarrow: no Spark job per page. Result row groups hold at most
+10k rows, the reference's record-batch size, so a page decodes a
+bounded slice of the result.
 """
 
 from __future__ import annotations
 
+import bisect
 import enum
+import glob
+import os
 import threading
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chapterhouseqe_spark.connections import ConnectionRegistry
 from chapterhouseqe_spark.sql.compiler import compile_expression, project
@@ -46,6 +63,12 @@ from chapterhouseqe_spark.sql.table_functions import (
 )
 
 ROW_ID = "__row_id"
+BINARY_AS_BYTES = "spark.sql.execution.pyspark.binaryAsBytes"
+# rows per result row group, the reference's 10k-row record batch
+# (materialize_files_task.rs:117-141): a page decodes only the row
+# groups it touches, so a page of n rows decodes fewer than
+# n + 2 * RESULT_ROW_GROUP_ROWS rows however long the result is
+RESULT_ROW_GROUP_ROWS = 10_000
 
 
 class QueryStatus(enum.Enum):
@@ -114,6 +137,58 @@ def with_row_ids(df: DataFrame, col_name: str = ROW_ID) -> DataFrame:
     return out
 
 
+@dataclass(frozen=True)
+class _RowGroupIndex:
+    """Where each row id of a materialized result lives.
+
+    ``with_row_ids`` gives each write task one contiguous run of row ids,
+    and the task writes that run to its files and row groups in order, so
+    row-group id ranges never overlap and sort by their first id.
+    """
+
+    # (first row id, last row id, file, row group) per non-empty row
+    # group, in row-id order
+    entries: list[tuple[int, int, str, int]]
+
+    @classmethod
+    def from_footers(cls, result_path: str, num_rows: int) -> "_RowGroupIndex":
+        """Index the footers of ``result_path/*.parquet``, which must
+        hold all ``num_rows`` rows of the result."""
+        entries = []
+        indexed = 0
+        for path in sorted(glob.glob(os.path.join(result_path, "*.parquet"))):
+            meta = pq.ParquetFile(path).metadata
+            paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+            col = paths.index(ROW_ID)
+            for rg in range(meta.num_row_groups):
+                group = meta.row_group(rg)
+                if group.num_rows == 0:
+                    continue
+                stats = group.column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    raise RuntimeError(
+                        f"{path} row group {rg} has no {ROW_ID} min/max "
+                        "statistics; the result cannot be paged"
+                    )
+                entries.append((stats.min, stats.max, path, rg))
+                indexed += group.num_rows
+        if indexed != num_rows:
+            raise RuntimeError(
+                f"the Parquet files the driver sees under {result_path} hold "
+                f"{indexed} of the result's {num_rows} rows; results_root "
+                "must be a directory the driver can read locally"
+            )
+        entries.sort()
+        return cls(entries)
+
+    def overlapping(self, lo: int, hi: int) -> list[tuple[str, int]]:
+        """``(file, row group)`` of every row group holding a row id in
+        ``[lo, hi)``."""
+        start = max(0, bisect.bisect_right(self.entries, lo, key=lambda e: e[0]) - 1)
+        stop = bisect.bisect_left(self.entries, hi, key=lambda e: e[0])
+        return [(f, rg) for _, last, f, rg in self.entries[start:stop] if last >= lo]
+
+
 @dataclass
 class _QueryState:
     query_id: str
@@ -123,6 +198,9 @@ class _QueryState:
     result_path: str | None = None
     num_rows: int = 0
     schema: object | None = None
+    index: _RowGroupIndex | None = None
+    # binary cells as bytes or bytearray, as collect() returns them
+    binary_as_bytes: bool = True
     thread: threading.Thread | None = None
     done: threading.Event = field(default_factory=threading.Event)
 
@@ -257,7 +335,9 @@ class QueryEngine:
                 df = self.dataframe_for(sql, mode)
                 path = f"{self.results_root}/{query_id}"
                 ided = with_row_ids(df)
-                writer = ided.write.mode("overwrite")
+                writer = ided.write.mode("overwrite").option(
+                    "parquet.block.row.count.limit", RESULT_ROW_GROUP_ROWS
+                )
                 if self.max_records_per_file:
                     writer = writer.option(
                         "maxRecordsPerFile", self.max_records_per_file
@@ -269,6 +349,10 @@ class QueryEngine:
                 state.num_rows = ided._chqe_total_rows
                 state.schema = df.schema
                 state.result_path = path
+                state.index = _RowGroupIndex.from_footers(path, state.num_rows)
+                state.binary_as_bytes = (
+                    self.spark.conf.get(BINARY_AS_BYTES, "true").lower() == "true"
+                )
                 state.status = QueryStatus.COMPLETE
             except Exception as exc:  # noqa: BLE001 — reported via status API
                 state.error = f"{type(exc).__name__}: {exc}"
@@ -366,31 +450,49 @@ class QueryEngine:
         ``forward=True`` returns rows [offset, offset+limit);
         ``forward=False`` returns the ``limit`` rows ENDING at ``offset``
         inclusive, in ascending order — the reference's reverse paging
-        (query_data_handler.rs:239-534) reworked as a row-id range
-        predicate, which Parquet row-group stats prune to the few files
-        containing the range (no full scan per page).
+        (query_data_handler.rs:239-534).
 
         ``allow_overflow`` mirrors query_data_handler.rs:425-463: when a
         reverse page hits the start of the result before filling
         ``limit`` rows, the window overflows FORWARD past the cursor so
         the client still gets a full page when rows exist.
+
+        The page is read on the driver: the row-group index built at
+        materialize time names the ``(file, row_group)`` pairs that hold
+        the window, pyarrow reads just those, and Spark's own Arrow → Row
+        converter gives cells equal to a ``collect()`` of the same rows.
         """
+        if offset < 0 or limit < 0:
+            raise ValueError(f"offset and limit must be >= 0, got {offset}, {limit}")
         state = self._state(query_id)
         if state.status is not QueryStatus.COMPLETE:
             raise RuntimeError(f"query {query_id} not complete: {state.status.value}")
-        df = self.spark.read.parquet(state.result_path)
         if forward:
             lo, hi = offset, offset + limit
         else:
             lo, hi = max(0, offset + 1 - limit), offset + 1
             if allow_overflow and hi - lo < limit:
                 hi = min(lo + limit, state.num_rows)
-        page = (
-            df.filter((F.col(ROW_ID) >= lo) & (F.col(ROW_ID) < hi))
-            .orderBy(ROW_ID)
-            .drop(ROW_ID)
+        parts = state.index.overlapping(lo, hi)
+        if not parts:
+            return []
+        # Spark writes TimestampType as INT96, which pyarrow would read as
+        # nanoseconds and silently wrap outside 1677..2262
+        table = pa.concat_tables(
+            pq.ParquetFile(path, coerce_int96_timestamp_unit="us").read_row_group(rg)
+            for path, rg in parts
         )
-        return [row.asDict() for row in page.collect()]
+        rid = pc.field(ROW_ID)
+        page = (
+            table.filter((rid >= lo) & (rid < hi))
+            .sort_by(ROW_ID)
+            .drop_columns([ROW_ID])
+            .cast(to_arrow_schema(state.schema))
+        )
+        rows = ArrowTableToRowsConversion.convert(
+            page, state.schema, binary_as_bytes=state.binary_as_bytes
+        )
+        return [row.asDict() for row in rows]
 
     def iter_results(self, query_id: str, page_size: int = 1000):
         """Forward-only iterator over a completed result — the client's

@@ -20,11 +20,13 @@ Design notes:
   shared storage, not a row stream through the driver — same posture
   as the reference, whose ``GetQueryData`` pages single row groups).
 - The reference addresses pages by (file_idx, row_group_idx, row_idx)
-  because results live in row groups; this engine addresses by one
-  flat row offset, which row-group stats still prune (engine.py:fetch
-  filters a row-id range). The iterator therefore carries one offset
-  instead of a triple — ``get_next_offset`` keeps the same
-  forward/reverse advance-and-stop logic.
+  because results live in row groups. This engine keeps that cursor on
+  the server: ``QueryEngine.fetch`` maps one flat row offset onto a
+  ``(file, row_group)`` index read from the result's Parquet footers and
+  reads those row groups from the driver-local ``results_root``. The
+  iterator therefore carries one offset instead of a triple —
+  ``get_next_offset`` keeps the same forward/reverse advance-and-stop
+  logic.
 """
 
 from __future__ import annotations
@@ -109,15 +111,18 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._reply(
                         409, {"error": f"query not complete: {st.value}"}
                     )
-                offset = int(q.get("offset", "0"))
-                limit = int(q.get("limit", "1000"))
-                rows = self.engine.fetch(
-                    q["query_id"],
-                    offset=offset,
-                    limit=limit,
-                    forward=q.get("forward", "true") == "true",
-                    allow_overflow=q.get("allow_overflow", "false") == "true",
-                )
+                try:
+                    offset = int(q.get("offset", "0"))
+                    limit = int(q.get("limit", "1000"))
+                    rows = self.engine.fetch(
+                        q["query_id"],
+                        offset=offset,
+                        limit=limit,
+                        forward=q.get("forward", "true") == "true",
+                        allow_overflow=q.get("allow_overflow", "false") == "true",
+                    )
+                except ValueError as exc:  # malformed or negative offset/limit
+                    return self._reply(400, {"error": f"bad paging parameter: {exc}"})
                 # flat row offsets of the returned page (ascending, the
                 # engine's reverse pages are already ascending) — the
                 # analog of the reference's record_offsets triples

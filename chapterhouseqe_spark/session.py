@@ -48,6 +48,9 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+QUIET_LOGGER = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+
+
 def get_spark(
     app_name: str = "chapterhouseqe_spark",
     master: str | None = None,
@@ -94,4 +97,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Every read of a glob path first probes it as a streaming sink
+    # directory, and the failed probe logs a WARN with a full
+    # FileNotFoundException stack trace; the read itself is unaffected.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        QUIET_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

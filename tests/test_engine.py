@@ -5,6 +5,8 @@ query_handler_state.rs:28-44, query_data_handler.rs:183-571).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from chapterhouseqe_spark.connections import ConnectionRegistry
@@ -236,3 +238,227 @@ def test_materialize_partitioned(engine, sf_dir, tmp_path):
         pruned._jdf.queryExecution(), "formatted"
     )
     assert "PartitionFilters" in plan
+
+
+def test_fetch_rejects_negative_paging(engine, sf_dir):
+    qid = engine.run_query_sync(
+        f"select n_nationkey from read_files('{sf_dir}/nation.parquet')",
+        mode="reference",
+    )
+    # a negative offset once returned rows 0..4 for [-5, 5)
+    with pytest.raises(ValueError):
+        engine.fetch(qid, offset=-5, limit=10)
+    with pytest.raises(ValueError):
+        engine.fetch(qid, offset=3, limit=-1, forward=False)
+
+
+_TYPED_SCHEMA = (
+    "i int, l long, f float, d double, dec decimal(12,3), s string, "
+    "b binary, t boolean, dt date, ts timestamp, tsn timestamp_ntz, "
+    "a array<int>, m map<string,int>, st struct<x:int,y:string>"
+)
+
+
+def _typed_rows(n: int) -> list[tuple]:
+    import datetime
+    import decimal
+
+    rows = []
+    for k in range(n):
+        if k % 5 == 4:  # a null in every column
+            rows.append((None,) * 14)
+            continue
+        rows.append((
+            k - 20,
+            k * 10**10,
+            k / 3,
+            k / 7 - 2,
+            decimal.Decimal(k) / 8,
+            f"s{k}é",
+            bytes([k, 255 - k]),
+            k % 2 == 0,
+            datetime.date(1969, 12, 1) + datetime.timedelta(days=9 * k),
+            datetime.datetime(2021, 3, 14, 1, 59, 26, 535)
+            + datetime.timedelta(hours=7 * k),
+            datetime.datetime(1999, 12, 31, 23) + datetime.timedelta(minutes=k),
+            [k, None, k + 1],
+            {"a": k, "b": None},
+            (k, None if k % 3 else f"y{k}"),
+        ))
+    # dates and timestamps at the ends of their ranges; timestamps are
+    # INT96 in the files, and pyarrow's default INT96 unit would wrap
+    # these. Spark's own collect() fails on a 0001-01-01 timestamp
+    # (year 0 after the session time zone shift), so the low one is
+    # two days later.
+    lo = datetime.datetime(1, 1, 3)
+    hi = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999)
+    for k, (dt, ts) in {1: (datetime.date(1, 1, 1), lo), 2: (hi.date(), hi)}.items():
+        rows[k] = rows[k][:8] + (dt, ts, ts) + rows[k][11:]
+    return rows
+
+
+# row groups of a few rows each, so a page also straddles the row groups
+# inside one file
+_TINY_ROW_GROUPS = {
+    "parquet.block.size": "256",
+    "parquet.block.size.row.check.min": "2",
+    "parquet.block.size.row.check.max": "2",
+    "parquet.page.size": "64",
+    "parquet.page.size.row.check.min": "1",
+    "parquet.page.size.row.check.max": "1",
+    "parquet.enable.dictionary": "false",
+}
+
+
+@pytest.mark.parametrize(
+    "confs",
+    [{}, _TINY_ROW_GROUPS, {"spark.sql.execution.pyspark.binaryAsBytes": "false"}],
+    ids=["file_per_7_rows", "tiny_row_groups", "binary_as_bytearray"],
+)
+def test_fetch_matches_spark_read(spark, engine, confs):
+    """Pages served from the row-group index equal a Spark read of the
+    same row-id window, cell for cell and type for type."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    n = 40
+    typed = spark.createDataFrame(_typed_rows(n), _TYPED_SCHEMA)
+    typed.repartition(3).createOrReplaceTempView("chqe_typed")
+    engine.max_records_per_file = 7
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        qid = engine.run_query_sync("select * from chqe_typed")
+        empty = engine.run_query_sync("select * from chqe_typed where i > 100")
+        assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+        assert engine.num_rows(qid) == n
+        path = f"{engine.results_root}/{qid}"
+        groups = [
+            pq.ParquetFile(f"{path}/{f}").metadata.num_row_groups
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        ]
+        assert len(groups) >= 6
+        if confs is _TINY_ROW_GROUPS:
+            assert max(groups) > 1
+
+        def spark_page(lo, hi):
+            page = (
+                spark.read.parquet(path)
+                .filter((F.col("__row_id") >= lo) & (F.col("__row_id") < hi))
+                .orderBy("__row_id")
+                .drop("__row_id")
+            )
+            return [r.asDict() for r in page.collect()]
+
+        pages = [
+            # (offset, limit, forward, allow_overflow)
+            (0, 10, True, False),
+            (5, 20, True, False),
+            (n - 1, 10, True, False),
+            (n + 3, 10, True, False),
+            (12, 0, True, False),
+            (0, 10, False, False),
+            (n - 1, 13, False, False),
+            (n + 5, 10, False, False),
+            (20, 0, False, False),
+            (3, 10, False, True),
+            (n - 1, 50, False, True),
+            (30, 9, False, True),
+        ]
+        for off, lim, fwd, ovf in pages:
+            if fwd:
+                lo, hi = off, off + lim
+            else:
+                lo, hi = max(0, off + 1 - lim), off + 1
+                if ovf and hi - lo < lim:
+                    hi = min(lo + lim, n)
+            got = engine.fetch(qid, off, lim, forward=fwd, allow_overflow=ovf)
+            want = spark_page(lo, hi)
+            assert len(got) == len(want), (off, lim, fwd, ovf)
+            assert got == want, (off, lim, fwd, ovf)
+            assert repr(got) == repr(want), (off, lim, fwd, ovf)  # same types
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
+    assert engine.num_rows(empty) == 0
+    assert engine.fetch(empty, 0, 10) == []
+    assert engine.fetch(empty, 0, 10, forward=False, allow_overflow=True) == []
+
+
+def test_row_group_index(tmp_path):
+    """The footer index finds every row group a window touches, refuses a
+    result whose row groups carry no row-id statistics, and refuses one
+    whose files do not hold every row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chapterhouseqe_spark.engine import _RowGroupIndex
+
+    ids = {"a": range(0, 7), "b": range(7, 15)}
+    for name, rid in ids.items():
+        pq.write_table(
+            pa.table({"__row_id": list(rid)}), tmp_path / f"{name}.parquet", row_group_size=3
+        )
+    index = _RowGroupIndex.from_footers(str(tmp_path), 15)
+    assert len(index.entries) == 6
+
+    def ids_in(lo, hi):
+        got = []
+        for path, rg in index.overlapping(lo, hi):
+            got += pq.ParquetFile(path).read_row_group(rg).column("__row_id").to_pylist()
+        return sorted(i for i in got if lo <= i < hi)
+
+    for lo in range(0, 17):
+        for hi in range(lo, 18):
+            assert ids_in(lo, hi) == list(range(lo, min(hi, 15))), (lo, hi)
+    # a window reads only the row groups it touches
+    assert len(index.overlapping(3, 6)) == 1
+    assert len(index.overlapping(5, 7)) == 2
+    assert index.overlapping(15, 20) == []
+
+    (tmp_path / "b.parquet").unlink()
+    with pytest.raises(RuntimeError, match="7 of the result's 15 rows"):
+        _RowGroupIndex.from_footers(str(tmp_path), 15)
+
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    pq.write_table(pa.table({"__row_id": [0, 1]}), bare / "x.parquet", write_statistics=False)
+    with pytest.raises(RuntimeError, match="statistics"):
+        _RowGroupIndex.from_footers(str(bare), 2)
+
+
+def test_results_root_the_driver_cannot_list_fails(spark, sf_dir, tmp_path):
+    """Spark writes a ``file://`` root fine, but the driver-side index
+    cannot list it: the query fails instead of serving empty pages."""
+    registry = ConnectionRegistry(default_base=sf_dir)
+    uri = QueryEngine(spark, results_root=f"file://{tmp_path}/r", registry=registry)
+    qid = uri.run_query_sync("select * from read_files('nation.parquet')")
+    assert uri.status(qid) is QueryStatus.ERROR
+    assert "0 of the result's 25 rows" in uri.error(qid)
+    assert "locally" in uri.error(qid)
+
+
+def test_result_row_groups_are_capped(spark, engine):
+    """Result row groups hold at most RESULT_ROW_GROUP_ROWS rows, so a
+    page never decodes a whole large file."""
+    import pyarrow.parquet as pq
+
+    from chapterhouseqe_spark.engine import RESULT_ROW_GROUP_ROWS
+
+    n = 2 * RESULT_ROW_GROUP_ROWS + 500
+    spark.range(n).coalesce(1).createOrReplaceTempView("chqe_long")
+    qid = engine.run_query_sync("select id from chqe_long")
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    path = f"{engine.results_root}/{qid}"
+    sizes = [
+        meta.row_group(rg).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+        for meta in [pq.ParquetFile(f"{path}/{f}").metadata]
+        for rg in range(meta.num_row_groups)
+    ]
+    assert sum(sizes) == n
+    assert max(sizes) == RESULT_ROW_GROUP_ROWS
+    page = engine.fetch(qid, RESULT_ROW_GROUP_ROWS - 3, 6)
+    assert [r["id"] for r in page] == list(range(RESULT_ROW_GROUP_ROWS - 3, RESULT_ROW_GROUP_ROWS + 3))

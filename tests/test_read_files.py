@@ -14,6 +14,18 @@ def test_load_glob_parquet(spark, sf_dir):
     assert df.count() == 5
 
 
+def test_glob_scan_sink_probe_is_quiet(spark):
+    """A glob read first probes the path as a streaming-sink directory;
+    the failed probe's WARN stack trace is silenced at its logger, which
+    must still name the class that logs it."""
+    from chapterhouseqe_spark.session import QUIET_LOGGER
+
+    jvm = spark.sparkContext._jvm
+    assert jvm.java.lang.Class.forName(QUIET_LOGGER).getName() == QUIET_LOGGER
+    level = jvm.org.apache.logging.log4j.LogManager.getLogger(QUIET_LOGGER).getLevel()
+    assert level.toString() == "ERROR"
+
+
 def test_connection_relative_path(spark, sf_dir):
     registry = ConnectionRegistry(default_base="/nowhere")
     registry.register("testdata", sf_dir)

@@ -97,3 +97,52 @@ def test_transport_failure_is_service_error():
     dead = QueryServiceClient("http://127.0.0.1:1", timeout=0.5)
     with pytest.raises(QueryServiceError, match="transport error"):
         dead.get_query_status("whatever")
+
+
+@pytest.mark.parametrize(
+    "params", ["offset=abc", "offset=-5&limit=10", "limit=-1", "limit=1.5"]
+)
+def test_bad_paging_parameters_are_400(service, client, params):
+    """Malformed or negative offset/limit is a client error, not a 500
+    (a negative offset once came back as rows labelled -5..-1)."""
+    import urllib.error
+    import urllib.request
+
+    qid = client.run_query("select * from read_files('region.parquet')")
+    client.wait_for_query_to_finish(qid, max_wait=60)
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(f"{service.address}/data?query_id={qid}&{params}")
+    assert ei.value.code == 400
+    with pytest.raises(QueryServiceError):
+        client.get_query_data(qid, offset=-5, limit=10)
+
+
+def test_concurrent_paging_matches_serial(client):
+    """Eight clients paging one result at once see the same pages as one
+    client paging serially."""
+    import random
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    qid = client.run_query("select * from read_files('orders.parquet')")
+    n = client.wait_for_query_to_finish(qid, max_wait=60)["num_rows"]
+    rng = random.Random(7)
+    plan = [
+        (rng.randrange(n + 50), rng.randrange(1, 120), rng.random() < 0.6,
+         rng.random() < 0.5)
+        for _ in range(96)
+    ]
+    serial = [client.get_query_data(qid, *op) for op in plan]
+    assert any(rows for rows, _ in serial)
+
+    def page(op):
+        return QueryServiceClient(client.address).get_query_data(qid, *op)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            concurrent = list(pool.map(page, plan, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert concurrent == serial
